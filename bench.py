@@ -4,7 +4,7 @@ recording harness parses a bounded window of stdout):
     {"metric": "extract_urls_per_sec", "value": N, "unit": "urls/sec",
      "queries": {...per-query seconds...}, "sf": ..., "cpus": ...,
      "crawl": {...}, "extract": {...}, "scaling": {...},
-     "submit_scaling": {...}, "seen_bloom": {...},
+     "submit_scaling": {...}, "seen_probe": {...},
      "detail": "bench_detail.json"}
 
 The FULL nested result (per-trial scaling points, per-partition
@@ -124,16 +124,15 @@ def run_queries(spark) -> dict[str, float]:
     return timings
 
 
-def bench_seen_bloom(spark) -> dict:
-    """SeenFilter bloom fast-path evidence: 4M-hash seen set over 32
-    shards, 55k candidates (5k true dups). Reports steady-state wall
-    seconds plus shuffle-Exchange counts of each final plan. At this
-    size the exact join survives locally only because AQE broadcasts
-    the pruned 32 MB hash column (impossible at 10^10 hashes, where it
-    becomes a full seen-side shuffle); the bloom and cuckoo sidecar
-    paths stay a tiny broadcast + shard-pruned map-side probe at ANY
-    seen size — and are already ~1.4x faster here. Exactness parity is
-    pinned by tests/test_seen_bloom.py and tests/test_cuckoo.py."""
+def bench_seen_probe(spark) -> dict:
+    """SeenFilter probe, exact anti-join vs the cuckoo prefilter: 4M-hash
+    seen set over 32 shards, 55k candidates (5k true dups). Reports
+    steady-state wall seconds plus shuffle-Exchange counts of each final
+    plan. At this size the exact join survives locally only because AQE
+    broadcasts the pruned 32 MB hash column (impossible at 10^10 hashes,
+    where it becomes a full seen-side shuffle); the cuckoo path stays a
+    tiny broadcast + shard-pruned map-side probe at ANY seen size.
+    Exactness parity is pinned by tests/test_cuckoo.py."""
     import shutil as _sh
 
     from pyspark.sql import functions as F
@@ -157,13 +156,11 @@ def bench_seen_bloom(spark) -> dict:
             F.concat(F.lit("https://h/u"), F.col("id")).alias("url"),
         ).cache()
         cands.count()
-        for mode, kind in (
-            ("exact", None), ("bloom", "bloom"), ("cuckoo", "cuckoo"),
-        ):
+        for mode, kind in (("exact", None), ("cuckoo", "cuckoo")):
             sf = SeenFilter(spark, f"{wd}/{mode}", n_shards=32, filter_kind=kind)
             for r in range(4):  # 4 delta rounds, like a real crawl tail
                 sf.add(base.filter(F.pmod("url_hash", F.lit(4)) == r), r)
-            sf.anti_join(cands).count()  # warm (bloom cache / code paths)
+            sf.anti_join(cands).count()  # warm (filter cache / code paths)
             t0 = time.perf_counter()
             res = sf.anti_join(cands)
             res.count()
@@ -386,7 +383,7 @@ def compact_result(full: dict) -> dict:
     }
     crawl = full.get("crawl") or {}
     extract = full.get("extract") or {}
-    seen = full.get("seen_bloom") or {}
+    seen = full.get("seen_probe") or {}
     stream_s = full.get("streaming") or {}
     compact = {
         "metric": full["metric"],
@@ -409,8 +406,8 @@ def compact_result(full: dict) -> dict:
         },
         "scaling": _sc(full.get("scaling") or {}),
         "submit_scaling": _sc(full.get("submit_scaling") or {}),
-        "seen_bloom": {
-            k: seen[k] for k in ("exact_sec", "bloom_sec", "cuckoo_sec") if k in seen
+        "seen_probe": {
+            k: seen[k] for k in ("exact_sec", "cuckoo_sec") if k in seen
         },
         # wall_sec already rides in queries["streaming_pass"]; rows/sec
         # is the parity headline, the rest lives in the sidecar
@@ -441,7 +438,7 @@ def compact_result(full: dict) -> dict:
     # unique-evidence section outright
     if not _fits():
         (compact.get("streaming") or {}).pop("coarse_rows_per_sec", None)
-    for drop in ("seen_bloom", "streaming", "submit_scaling"):
+    for drop in ("seen_probe", "streaming", "submit_scaling"):
         if _fits():
             break
         compact.pop(drop, None)
@@ -451,13 +448,13 @@ def compact_result(full: dict) -> dict:
 def main() -> None:
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     timings: dict[str, float] = {}
-    seen_bloom: dict = {}
+    seen_probe: dict = {}
 
     if os.environ.get("SPARK_GRAFT_BENCH_SKIP_QUERIES") != "1":
         spark = get_spark(parallelism=CPUS, app_name="catalog_bench")
         try:
             timings = run_queries(spark)
-            seen_bloom = bench_seen_bloom(spark)
+            seen_probe = bench_seen_probe(spark)
         finally:
             spark.stop()
 
@@ -589,7 +586,7 @@ def main() -> None:
         "extract": hi,
         "scaling": scaling,
         "submit_scaling": submit,
-        "seen_bloom": seen_bloom,
+        "seen_probe": seen_probe,
         "streaming": streaming,
     }
     try:

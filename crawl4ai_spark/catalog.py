@@ -62,6 +62,7 @@ from .operators.scorers import (
     path_depth_score,
 )
 from .operators.similarity import cosine, cosine_topk_lsh, dot, l2_norm
+from .persist import PersistSlot
 
 
 def _spread_scan(df: DataFrame, spark: SparkSession, key: str) -> DataFrame:
@@ -86,23 +87,11 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PAGES_CACHE: dict[str, DataFrame] = {}
 
-# bounded scratch registry for per-query multi-consumer persists
+# bounded scratch slot for per-query multi-consumer persists
 # (distinct from _PAGES_CACHE, which is a keep-forever named corpus
-# cache): each _scratch_persist call evicts the previous call's frame —
-# eviction is recompute-safe, so a session holds at most one query's
-# worth of scratch blocks
-_SCRATCH_CACHES: list[DataFrame] = []
-
-
-def _scratch_persist(df: DataFrame) -> DataFrame:
-    while _SCRATCH_CACHES:
-        try:
-            _SCRATCH_CACHES.pop().unpersist()
-        except Exception:
-            pass
-    df = df.persist()
-    _SCRATCH_CACHES.append(df)
-    return df
+# cache): each query's persist releases the previous one's, so a
+# session holds at most one query's worth of scratch blocks
+_SCRATCH = PersistSlot()
 
 
 def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -382,10 +371,6 @@ FROM documents
 """
 
 
-def q_text_lang_id(spark, sf_dir):
-    return _docs(spark, sf_dir).select("doc_id", lang_id("text").alias("detected_lang"))
-
-
 def _oracle_lang_id() -> str:
     hits = {lg: _sw_hits_sql(lg) for lg in STOPWORDS}
     best = "greatest(" + ", ".join(f"h_{lg}" for lg in STOPWORDS) + ")"
@@ -397,10 +382,6 @@ def _oracle_lang_id() -> str:
 WITH h AS (SELECT doc_id, {hit_cols} FROM documents)
 SELECT doc_id, CASE {cases} ELSE 'und' END AS detected_lang FROM h
 """
-
-
-def q_text_token_count(spark, sf_dir):
-    return _docs(spark, sf_dir).select("doc_id", token_count("text").alias("n_tokens"))
 
 
 ORACLE_TEXT_TOKEN_COUNT = f"""
@@ -1316,7 +1297,7 @@ def q_dedup_simhash_pairs(spark, sf_dir):
     return simhash_pairs(df.unionByName(near), "text", "doc_id", max_hamming=3)
 
 
-def q_dedup_ngram_jaccard(spark, sf_dir):
+def _q_dedup_ngram_jaccard(spark, sf_dir):
     import pyarrow.parquet as pq
 
     df = _docs(spark, sf_dir).select("doc_id", "text")
@@ -1357,7 +1338,7 @@ WHERE j >= 0.9
 """
 
 
-def q_dedup_ngram_prefix(spark, sf_dir):
+def _q_dedup_ngram_prefix(spark, sf_dir):
     """The AllPairs/PPJoin prefix-filtered strategy forced on (auto
     picks the plain inverted index at this scale): identical output to
     dedup_ngram_jaccard, so it shares the exact-Jaccard oracle."""
@@ -1370,7 +1351,7 @@ def q_dedup_ngram_prefix(spark, sf_dir):
     return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
-def q_dedup_minhash_portable(spark, sf_dir):
+def _q_dedup_minhash_portable(spark, sf_dir):
     """The full MinHash+LSH pipeline with the engine-portable shingle
     hash: permutations, banding, candidate generation and the
     agreement estimate are all replayed exactly by the SQL oracle (the
@@ -1423,7 +1404,7 @@ SELECT id_a, id_b, round(ej, 6) AS est_jaccard FROM agree WHERE ej >= 0.8
 """
 
 
-def q_dedup_simhash_portable(spark, sf_dir):
+def _q_dedup_simhash_portable(spark, sf_dir):
     """SimHash with the portable shingle hash: the bit-vote fold, the
     pigeonhole block tables and the Hamming verify are replayed by the
     SQL oracle (xxhash64 production entry stays rows-only)."""
@@ -1469,10 +1450,10 @@ def q_dedup_ngram(spark, sf_dir):
     AllPairs/PPJoin prefix filter — output-identical by construction)
     as ONE tagged gate row; the oracle replays the pipeline once per
     tag. Frees a driver-window slot."""
-    inv = q_dedup_ngram_jaccard(spark, sf_dir).select(
+    inv = _q_dedup_ngram_jaccard(spark, sf_dir).select(
         F.lit("inverted").alias("algo"), "id_a", "id_b", "jaccard"
     )
-    pref = q_dedup_ngram_prefix(spark, sf_dir).select(
+    pref = _q_dedup_ngram_prefix(spark, sf_dir).select(
         F.lit("prefix").alias("algo"), "id_a", "id_b", "jaccard"
     )
     return inv.unionByName(pref)
@@ -1531,11 +1512,11 @@ def q_dedup_lsh_portable(spark, sf_dir):
     tagged gate row: UNION ALL with a strategy tag, schemas unified on
     (algo, id_a, id_b, score). Frees a slot in the driver's 50-entry
     window while keeping both full oracle replays bit-exact."""
-    mh = q_dedup_minhash_portable(spark, sf_dir).select(
+    mh = _q_dedup_minhash_portable(spark, sf_dir).select(
         F.lit("minhash").alias("algo"), "id_a", "id_b",
         F.col("est_jaccard").alias("score"),
     )
-    sh = q_dedup_simhash_portable(spark, sf_dir).select(
+    sh = _q_dedup_simhash_portable(spark, sf_dir).select(
         F.lit("simhash").alias("algo"), "id_a", "id_b",
         F.col("hamming").cast("double").alias("score"),
     )
@@ -1602,12 +1583,6 @@ SELECT node AS vec_id, component, csize,
        CAST(node = component AS INT) AS is_canonical
 FROM lab JOIN sz USING (component)
 """
-
-
-def q_text_fingerprint(spark, sf_dir):
-    return _docs(spark, sf_dir).select(
-        "doc_id", doc_fingerprint_portable("text").alias("fp")
-    )
 
 
 ORACLE_TEXT_FINGERPRINT = """
@@ -1902,7 +1877,7 @@ FROM n
 """
 
 
-def q_sim_cosine_topk_ivf(spark, sf_dir):
+def _q_sim_cosine_topk_ivf(spark, sf_dir):
     """IVF ANN top-k (the partition-pruning scale path): coarse
     quantizer = deterministic corpus sample (vec_id < 16), 6-decimal
     quantized assignment with centroid-id tie-break — the whole
@@ -1944,7 +1919,7 @@ LIMIT 20
 """
 
 
-def q_sim_cosine_topk_lsh(spark, sf_dir):
+def _q_sim_cosine_topk_lsh(spark, sf_dir):
     """Hyperplane-LSH ANN top-k. The planes are deterministic
     (RandomState(42)), so the oracle embeds them as literals and
     replays bucketing, the Hamming<=2 multiprobe set and the exact
@@ -1994,7 +1969,7 @@ LIMIT 20
 """
 
 
-def q_sim_cosine_topk_pq(spark, sf_dir):
+def _q_sim_cosine_topk_pq(spark, sf_dir):
     """Product-quantization ANN (operators/similarity.py
     cosine_topk_pq): 64-dim vectors -> 4 subspace codes from sampled
     codebooks, integer micro-unit ADC candidate scan, exact rerank of
@@ -2049,13 +2024,13 @@ def q_sim_cosine_topk_ann(spark, sf_dir):
     """All three ANN top-k paths (hyperplane-LSH multiprobe, IVF
     inverted lists, PQ asymmetric-distance) as ONE tagged-union gate
     row — three full SQL replays, one driver slot."""
-    lsh = q_sim_cosine_topk_lsh(spark, sf_dir).select(
+    lsh = _q_sim_cosine_topk_lsh(spark, sf_dir).select(
         F.lit("lsh").alias("algo"), "vec_id", "cosine_sim"
     )
-    ivf = q_sim_cosine_topk_ivf(spark, sf_dir).select(
+    ivf = _q_sim_cosine_topk_ivf(spark, sf_dir).select(
         F.lit("ivf").alias("algo"), "vec_id", "cosine_sim"
     )
-    pq = q_sim_cosine_topk_pq(spark, sf_dir).select(
+    pq = _q_sim_cosine_topk_pq(spark, sf_dir).select(
         F.lit("pq").alias("algo"), "vec_id", "cosine_sim"
     )
     return lsh.unionByName(ivf).unionByName(pq)
@@ -2525,7 +2500,7 @@ ORACLES["crawl_bfs"] = ORACLE_CRAWL_BFS
 _WORDS_SQL = "list_filter(str_split_regex(text, '\\s+'), x -> x <> '')"
 
 
-def q_chunk_fixed(spark, sf_dir):
+def _q_chunk_fixed(spark, sf_dir):
     from .functions.chunking import chunk_table, fixed_word_chunks
 
     df = _docs(spark, sf_dir)
@@ -2544,7 +2519,7 @@ FROM u
 """
 
 
-def q_chunk_sliding(spark, sf_dir):
+def _q_chunk_sliding(spark, sf_dir):
     from .functions.chunking import chunk_table, sliding_word_chunks
 
     df = _docs(spark, sf_dir)
@@ -2569,7 +2544,7 @@ SELECT doc_id, 0, text FROM p WHERE n <= 10
 """
 
 
-def q_chunk_overlap(spark, sf_dir):
+def _q_chunk_overlap(spark, sf_dir):
     from .functions.chunking import chunk_table, overlapping_window_chunks
 
     df = _docs(spark, sf_dir)
@@ -2593,7 +2568,7 @@ SELECT doc_id, 0, text FROM p WHERE n <= 12
 """
 
 
-def q_chunk_sentence(spark, sf_dir):
+def _q_chunk_sentence(spark, sf_dir):
     """Sentence chunker over a synthetic sentence-ified corpus (the raw
     corpus has no punctuation): every 7-word group becomes a period-
     terminated sentence, which the chunker must recover with
@@ -2627,7 +2602,7 @@ FROM f
 """
 
 
-def q_chunk_regex(spark, sf_dir):
+def _q_chunk_regex(spark, sf_dir):
     from .functions.chunking import chunk_table, regex_chunks
 
     df = _docs(spark, sf_dir)
@@ -2699,9 +2674,9 @@ def q_chunk_word_windows(spark, sf_dir):
     """FixedLengthWord + SlidingWindow + (regex-)NlpSentence chunkers."""
     tag = lambda df, t: df.select(F.lit(t).alias("strategy"), "*")  # noqa: E731
     return (
-        tag(q_chunk_fixed(spark, sf_dir), "fixed")
-        .unionByName(tag(q_chunk_sliding(spark, sf_dir), "sliding"))
-        .unionByName(tag(q_chunk_sentence(spark, sf_dir), "sentence"))
+        tag(_q_chunk_fixed(spark, sf_dir), "fixed")
+        .unionByName(tag(_q_chunk_sliding(spark, sf_dir), "sliding"))
+        .unionByName(tag(_q_chunk_sentence(spark, sf_dir), "sentence"))
     )
 
 
@@ -2715,8 +2690,8 @@ UNION ALL SELECT 'sentence', * FROM ({ORACLE_CHUNK_SENTENCE})
 def q_chunk_boundaries(spark, sf_dir):
     """OverlappingWindow + Regex chunkers."""
     tag = lambda df, t: df.select(F.lit(t).alias("strategy"), "*")  # noqa: E731
-    return tag(q_chunk_overlap(spark, sf_dir), "overlap").unionByName(
-        tag(q_chunk_regex(spark, sf_dir), "regex")
+    return tag(_q_chunk_overlap(spark, sf_dir), "overlap").unionByName(
+        tag(_q_chunk_regex(spark, sf_dir), "regex")
     )
 
 
@@ -2770,19 +2745,6 @@ def _head_col():
     )
 
 
-def q_head_meta(spark, sf_dir):
-    from .functions.headpeek import head_section, head_title, meta_value
-
-    df = _docs(spark, sf_dir).withColumn("_head", head_section(_head_col()))
-    return df.select(
-        "doc_id",
-        head_title("_head").alias("title"),
-        meta_value("_head", "description").alias("description"),
-        meta_value("_head", "robots").alias("robots"),
-        meta_value("_head", "canonical").alias("canonical"),
-    )
-
-
 ORACLE_HEAD_META = f"""
 SELECT doc_id,
        {_TITLE_SQL} AS title,
@@ -2792,19 +2754,6 @@ SELECT doc_id,
             ELSE '' END AS canonical
 FROM documents
 """
-
-
-def q_head_seo(spark, sf_dir):
-    from .functions.headpeek import head_section, seo_score
-
-    df = _docs(spark, sf_dir).withColumn("_head", head_section(_head_col()))
-    url = F.expr("'https://example.com/p' || CAST(doc_id AS STRING)")
-    return df.select(
-        "doc_id",
-        F.round(seo_score("_head", url, keywords=["data", "spark"]), 6).alias(
-            "seo"
-        ),
-    )
 
 
 ORACLE_HEAD_SEO = f"""
@@ -2833,18 +2782,6 @@ SELECT doc_id,
              + 0.20 * s_r + 0.10 * s_s + 0.15 * s_u, 6) AS seo
 FROM s
 """
-
-
-def q_head_relevance(spark, sf_dir):
-    from .functions.headpeek import content_relevance_score, head_section
-
-    df = _docs(spark, sf_dir).withColumn("_head", head_section(_head_col()))
-    return df.select(
-        "doc_id",
-        F.round(content_relevance_score("_head", "spark data table"), 6).alias(
-            "relevance"
-        ),
-    )
 
 
 def _oracle_head_relevance() -> str:
@@ -4273,7 +4210,7 @@ def q_tables_extract(spark, sf_dir):
     # UDF would run three times over the corpus. Registered in the
     # bounded scratch registry (previous call's cache evicted) so
     # repeated catalog runs in one session don't leak storage.
-    scraped = _scratch_persist(
+    scraped = _SCRATCH.replace(
         scrape_stage(
             pages.select("url", mhtml.alias("mhtml")),
             html_col="mhtml",

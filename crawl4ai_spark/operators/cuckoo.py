@@ -16,8 +16,8 @@ Kaminsky, Mitzenmacher, CoNEXT 2014): f-bit fingerprints in buckets of
     i2 = i1 XOR H(fingerprint) mod m        (m a power of two)
 
 so either bucket index plus the stored fingerprint recovers the other —
-eviction (and deletion) never needs the original key. vs the bloom
-sidecar (seen.py): supports O(1) DELETE (bloom bits can't be unset), and
+eviction (and deletion) never needs the original key. vs a 16 bits/key,
+k=7 bloom filter: supports O(1) DELETE (bloom bits can't be unset), and
 lookup touches exactly 2 cache lines instead of k=7 scattered bits; cost
 is ~24 bits/key at the 0.84 target load vs bloom's 16.
 
@@ -202,7 +202,8 @@ def delete(hashes: np.ndarray, m: int, table: np.ndarray) -> np.ndarray:
 def test_any(hashes: np.ndarray,
              filters: list[tuple[int, int, np.ndarray]]) -> np.ndarray:
     """True where a hash might be in ANY of the (m, slots, table-bytes)
-    sidecar rows — mirrors seen._bloom_test_any's short-circuit shape."""
+    sidecar rows (one per seen-delta round). Short-circuits: each row
+    probes only the hashes no earlier row has matched yet."""
     out = np.zeros(len(hashes), dtype=bool)
     for m, _slots, raw in filters:
         pending = ~out

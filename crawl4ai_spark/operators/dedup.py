@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import shingle_hashes, shingle_hashes_md5, shingles, tokens
+from ..persist import PersistSlot
 
 # Mersenne prime 2^31-1: (a*(x%p))%p stays within int64 for a,p < 2^31.
 MERSENNE_P = 2147483647
@@ -42,7 +43,9 @@ def _mh_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     return params
 
 
-_SIDE_TABLES: list = []
+# the minhash/prefix pipelines persist a side table that is read twice
+# within one returned (lazy) plan; the next dedup call releases it
+_SIDE_TABLES = PersistSlot()
 
 
 def _plan_row_count(df: DataFrame) -> int | None:
@@ -53,26 +56,6 @@ def _plan_row_count(df: DataFrame) -> int | None:
         return int(rc.get().longValue()) if rc.isDefined() else None
     except Exception:
         return None
-
-
-def _cache_side_table(df: DataFrame) -> DataFrame:
-    """Persist an intra-call side table, evicting the previous call's.
-
-    The minhash/prefix pipelines persist a table that is read twice
-    within one returned plan; the persist must outlive this function
-    (the result is lazy), so it can't be unpersisted here. Evicting on
-    the NEXT dedup call bounds cached blocks to one call's worth in a
-    long-lived session, and eviction is always safe — a still-referenced
-    plan just recomputes.
-    """
-    while _SIDE_TABLES:
-        try:
-            _SIDE_TABLES.pop().unpersist()
-        except Exception:
-            pass
-    df = df.persist()
-    _SIDE_TABLES.append(df)
-    return df
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -185,7 +168,7 @@ def minhash_lsh_pairs(
     """
     rows = num_hashes // bands
     sig = minhash_signature(F.col(text_col), num_hashes, shingle_k, seed, hash_fn)
-    with_sig = _cache_side_table(
+    with_sig = _SIDE_TABLES.replace(
         _spread(df).select(F.col(id_col).alias("_id"), sig.alias("_sig"))
     )
 
@@ -460,7 +443,7 @@ def ngram_jaccard_pairs(
 
     # -- prefix-filtered path ------------------------------------------------
     # one shingle-hash pass feeds DF counts AND sets
-    ex = _cache_side_table(ex)
+    ex = _SIDE_TABLES.replace(ex)
     dfreq = ex.groupBy("_sh").agg(F.count("*").alias("_df"))
     exd = ex.join(dfreq, "_sh")
     if max_shingle_df is not None:

@@ -56,28 +56,20 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..persist import PersistSlot
 from .sampling import E6, uniform_e6
 
 #: micro-nat quantizer — shared boundary guard (see module docstring)
 _UNAT = lambda c: F.round(c * F.lit(1e6) + F.lit(1e-9)).cast("long")  # noqa: E731
 
-_FEATS_CACHE: list[DataFrame] = []
+_FEATS = PersistSlot()
 
 
 def cache_featurized(feats: DataFrame) -> DataFrame:
     """Persist a featurize() view that a LAZY caller consumes twice
-    (model fit + scoring probe), evicting the previous call's cache —
-    the repo's bounded one-slot registry pattern (dedup._cache_side_table):
-    the persist must outlive the calling function because the returned
-    plan is lazy, and eviction on the next call is recompute-safe."""
-    while _FEATS_CACHE:
-        try:
-            _FEATS_CACHE.pop().unpersist()
-        except Exception:
-            pass
-    feats = feats.persist()
-    _FEATS_CACHE.append(feats)
-    return feats
+    (model fit + scoring probe), releasing the previous call's
+    (persist.PersistSlot)."""
+    return _FEATS.replace(feats)
 
 
 def hashed_ngram_buckets(words: Column, buckets: int) -> Column:

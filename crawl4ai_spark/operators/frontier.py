@@ -34,6 +34,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -177,15 +178,14 @@ class CrawlConfig:
     # read/write anti-joins against a shared crawl_results table.
     cache_mode: str = "bypass"
     cache_path: str | None = None
-    # bloom fast path in front of the seen anti-join (exactness
-    # preserved: bloom has no false negatives; "maybe" rows still go
-    # through the exact join). Wins when |seen| >> |candidates| — the
-    # steady state of a long crawl; at toy scale the exact join alone
-    # is faster, so default off.
-    seen_bloom: bool = False
-    # explicit sidecar codec: "bloom" | "cuckoo" | None (None + seen_bloom
-    # → "bloom"). "cuckoo" is the north_star's partitioned cuckoo-filter
-    # seen set (operators/cuckoo.py) — same topology, deletable filter.
+    # seen-set membership test: None = the exact co-partitioned
+    # anti-join; "cuckoo" = the north_star's partitioned cuckoo-filter
+    # sidecar (operators/cuckoo.py) as a prefilter in front of it
+    # (exactness preserved: no false negatives; "maybe" rows still go
+    # through the exact join). The prefilter wins when |seen| >>
+    # |candidates| — the steady state of a long crawl; at toy scale the
+    # exact join alone is faster, so default off. Any other value
+    # raises ValueError when the run is constructed.
     seen_filter_kind: str | None = None
     # spider-trap admission filter (filters.is_crawler_trap): drop
     # repeated-segment / calendar-walk / param-explosion URLs before
@@ -237,7 +237,6 @@ class CrawlConfig:
             "strategy": self.strategy,
             "batch_size": self.batch_size,
             "cache_mode": self.cache_mode,
-            "seen_bloom": self.seen_bloom,
             "seen_filter_kind": self.seen_filter_kind,
             "priority_aging": self.priority_aging,
             "trap_filter": self.trap_filter,
@@ -464,7 +463,6 @@ class CrawlRun:
         self.config = config or CrawlConfig()
         self.seen = SeenFilter(
             spark, workdir, self.config.n_shards,
-            use_bloom=self.config.seen_bloom,
             filter_kind=self.config.seen_filter_kind,
         )
         self.politeness = PolitenessState(spark, workdir)
@@ -777,15 +775,7 @@ class CrawlRun:
         t0 = time.perf_counter()
         # crash cleanup: a partially-run round may have written its
         # url_seen delta for r+1; the anti-join below must not see it
-        import shutil
-
-        for partial_delta in (
-            os.path.join(self.workdir, "url_seen", f"round={r + 1}"),
-            os.path.join(self.workdir, "url_seen_blooms", f"round={r + 1}"),
-            os.path.join(self.workdir, "url_seen_cuckoo", f"round={r + 1}"),
-        ):
-            if os.path.exists(partial_delta):
-                shutil.rmtree(partial_delta)
+        self.seen.drop_round(r + 1)
 
         frontier = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
             self._frontier_path(r)
@@ -1276,7 +1266,7 @@ class CrawlRun:
             .drop("_rn")
         )
 
-        if self.seen.use_bloom:
+        if self.seen.uses_sidecar:
             # the sidecar prefilter splits `deduped` twice (definite-new
             # / maybe-seen) and collects the maybe-side shard list;
             # persist so the link-discovery plan runs once
@@ -1371,7 +1361,7 @@ class CrawlRun:
             )
         self.seen.add(seen_delta, r + 1, assume_unique=True)
         budgeted.unpersist(blocking=False)
-        if self.seen.use_bloom:
+        if self.seen.uses_sidecar:
             deduped.unpersist(blocking=False)
 
         # politeness fold
@@ -1476,7 +1466,7 @@ class CrawlRun:
         north star checkpoints "cuckoo filter shards, frontier offsets,
         politeness counters" to Iceberg snapshots; here that is the
         url_seen delta, the next-round frontier, and the politeness
-        state dir (seen-filter bloom/cuckoo sidecars are derived data,
+        state dir (the seen filter's cuckoo sidecars are derived data,
         rebuilt from the deltas they index). Idempotent across
         crash-rerun: a round that died after adoption but before its
         manifest re-runs in place, so stale snapshots with
@@ -1492,7 +1482,6 @@ class CrawlRun:
         # launch a footer-reading job over many files
         seen_schema = T.StructType.fromDDL(SEEN_SCHEMA)
         pol_schema = T.StructType.fromDDL(STATE_SCHEMA)
-        seen_dir = os.path.join(self.workdir, "url_seen")
         pol_dir = os.path.join(self.workdir, "politeness")
         entries: list[tuple] = [
             ("results", self._results_path(r), results_schema,
@@ -1503,13 +1492,13 @@ class CrawlRun:
             entries += [
                 ("frontier", self._frontier_path(0), frontier_schema,
                  {"round": 0, "stage": "seed"}),
-                ("url_seen", os.path.join(seen_dir, "round=0"), seen_schema,
+                ("url_seen", self.seen.delta_path(0), seen_schema,
                  {"round": 0, "stage": "seed"}),
             ]
         entries += [
             ("frontier", self._frontier_path(r + 1), frontier_schema,
              {"round": r}),
-            ("url_seen", os.path.join(seen_dir, f"round={r + 1}"), seen_schema,
+            ("url_seen", self.seen.delta_path(r + 1), seen_schema,
              {"round": r}),
             ("politeness", os.path.join(pol_dir, f"round={r + 1}"), pol_schema,
              {"round": r}),
@@ -1573,8 +1562,6 @@ class CrawlRun:
         possibly-half-deleted r+1 seen delta is re-cleaned by
         run_round's own crash cleanup.
         """
-        import shutil
-
         if k < 0:
             raise ValueError("rewind_to_round(k): k must be >= 0")
         last = self.latest_completed_round()
@@ -1588,19 +1575,15 @@ class CrawlRun:
             shutil.rmtree(self._results_path(r), ignore_errors=True)
             shutil.rmtree(self._metrics_path(r), ignore_errors=True)
             shutil.rmtree(self._frontier_path(r + 1), ignore_errors=True)
-            for state_dir in ("url_seen", "politeness"):
-                shutil.rmtree(
-                    os.path.join(self.workdir, state_dir, f"round={r + 1}"),
-                    ignore_errors=True)
+            self.seen.drop_round(r + 1)
+            shutil.rmtree(
+                os.path.join(self.workdir, "politeness", f"round={r + 1}"),
+                ignore_errors=True)
             # robots increments and redirect-alias files are IN-round
             # state (produced during round r), so forgetting round r
             # forgets them — the replay re-derives identical contents
             shutil.rmtree(self._robots_path(r), ignore_errors=True)
             shutil.rmtree(self._alias_path(r), ignore_errors=True)
-            shutil.rmtree(
-                os.path.join(self.seen.bloom_path, f"round={r + 1}"),
-                ignore_errors=True)
-        self.seen.invalidate_cache()
         if self.config.snapshot_tables:
             for name in ("results", "frontier", "url_seen", "politeness"):
                 _truncate_table_to_round(self.table(name), k)

@@ -22,6 +22,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..persist import PersistSlot
+
 STATE_SCHEMA = "host string, current_delay double, fail_count int"
 
 BASE_DELAY = 1.0
@@ -55,20 +57,8 @@ def _leaf_indices(pf, names: list[str]) -> list[int]:
     ]
 
 
-_PRE_SPLIT_CACHE: list = []
-
-
-def _cache_pre_split(df: DataFrame) -> DataFrame:
-    """Persist the phase-1 ranked frontier, evicting the previous
-    round's (same bounded-registry pattern as operators.dedup)."""
-    while _PRE_SPLIT_CACHE:
-        try:
-            _PRE_SPLIT_CACHE.pop().unpersist()
-        except Exception:
-            pass
-    df = df.persist()
-    _PRE_SPLIT_CACHE.append(df)
-    return df
+# the phase-1 ranked frontier of the latest select_within_budget call
+_PRE_SPLIT = PersistSlot()
 
 
 def select_within_budget(
@@ -142,7 +132,7 @@ def select_within_budget(
     # upstream frontier plan (joins, filters) executes twice per
     # downstream consumer. Bounded registry: evicted on the next call
     # (one crawl round per call), eviction is recompute-safe.
-    pre = _cache_pre_split(pre)
+    pre = _PRE_SPLIT.replace(pre)
     cand = pre.filter(F.col("_prn") <= F.col("_budget"))
     rest = pre.filter(F.col("_prn") > F.col("_budget")).withColumn(
         "_selected", F.lit(False)

@@ -50,27 +50,12 @@ from .functions.text import quality_score, token_count
 from .operators.dedup import minhash_lsh_pairs, resolve_duplicates
 from .operators.packing import pack_concat_chunk, packing_stats
 from .operators.sampling import uniform_e6
+from .persist import PersistSlot
 
-_PIPELINE_CACHES: list[DataFrame] = []
-
-
-def _cache_stage(df: DataFrame) -> DataFrame:
-    """Persist a multi-consumer stage into the bounded registry.
-    Eviction happens at each pipeline ENTRY (corpus_flags /
-    build_corpus call _evict_stage_caches first) — recompute-safe, so
-    a long session holds at most one pipeline's worth of cached
-    blocks."""
-    df = df.persist()
-    _PIPELINE_CACHES.append(df)
-    return df
-
-
-def _evict_stage_caches() -> None:
-    while _PIPELINE_CACHES:
-        try:
-            _PIPELINE_CACHES.pop().unpersist()
-        except Exception:
-            pass
+# multi-consumer stage caches: released at each pipeline ENTRY
+# (corpus_flags / build_corpus), so a long session holds at most one
+# pipeline's worth of cached blocks
+_STAGES = PersistSlot()
 
 
 @dataclass
@@ -138,10 +123,10 @@ def corpus_flags(
     (CCNet §3.3), and dedup runs on what survives.
     """
     # evict the PREVIOUS call's caches (bounded-registry discipline —
-    # the docstring on _cache_stage promises at most one pipeline's
+    # the comment on _STAGES promises at most one pipeline's
     # worth of cached blocks, which must hold for direct corpus_flags
     # callers too, not only via build_corpus)
-    _evict_stage_caches()
+    _STAGES.release()
     t = F.col(text_col)
 
     # optional stage 0: CCNet cross-document boilerplate-line removal
@@ -228,7 +213,7 @@ def corpus_flags(
         # bigram counts, transitions, and the outer join side all read
         # the line-scrubbed/host-joined upstream) — cache it or the
         # line-dedup shuffles re-execute once per branch
-        flagged = _cache_stage(flagged)
+        flagged = _STAGES.hold(flagged)
         lm = lm_self_perplexity(
             flagged.select(id_col, text_col), text_col, id_col
         ).select(id_col, "n_transitions", "avg_cost_milli")
@@ -237,7 +222,7 @@ def corpus_flags(
             # (threshold agg, bucket assignment, final join-back) — no
             # cross-branch CSE, so persist or the corpus-wide bigram
             # training re-runs per consumer
-            lm = _cache_stage(lm)
+            lm = _STAGES.hold(lm)
         # <2-token docs carry the no-evidence sentinel 0, which is NOT
         # a measured cost — pass them through instead of letting
         # lm_min_milli > 0 (or a tail bucket) silently drop every
@@ -299,7 +284,7 @@ def corpus_flags(
     # final join's left side both read everything above — without a
     # persist the quality expressions and the dedup window run once
     # per branch (3x upstream at the contamination fan-out too).
-    flagged = _cache_stage(flagged)
+    flagged = _STAGES.hold(flagged)
 
     # near-dedup among exact survivors
     survivors = flagged.filter(F.col("exact_keep"))
@@ -326,7 +311,7 @@ def corpus_flags(
         "near_keep", F.col("exact_keep") & F.coalesce("_canon", F.lit(False))
     ).drop("_canon")
 
-    flagged = _cache_stage(flagged)
+    flagged = _STAGES.hold(flagged)
 
     # decontamination (skipped -> clean == near_keep)
     if eval_docs is not None:
@@ -424,8 +409,8 @@ def build_corpus(
     not (the BigCode/RefinedWeb ordering).
     """
     cfg = cfg or CorpusConfig()
-    _evict_stage_caches()
-    flags = _cache_stage(
+    _STAGES.release()
+    flags = _STAGES.hold(
         corpus_flags(docs, eval_docs, cfg, text_col, id_col, lang_col, host_col)
     )
     corpus = flags.filter(F.col("sampled")).drop(
@@ -436,7 +421,7 @@ def build_corpus(
         from .functions.entities import redact_pii
 
         corpus = corpus.withColumn(text_col, redact_pii(F.col(text_col)))
-    assignment = _cache_stage(
+    assignment = _STAGES.hold(
         pack_concat_chunk(
             corpus,
             id_col,

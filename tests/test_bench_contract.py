@@ -58,11 +58,10 @@ def _full_result() -> dict:
             "efficiency": 0.905,
             "trials": [{"eff": 0.9}, {"eff": 0.85}],
         },
-        "seen_bloom": {
+        "seen_probe": {
             "seen_rows": 4_000_000, "candidates": 55_000, "true_dups": 5_000,
-            "exact_sec": 2.143, "bloom_sec": 1.381, "cuckoo_sec": 1.192,
-            "exact_shuffle_exchanges": 0, "bloom_shuffle_exchanges": 0,
-            "cuckoo_shuffle_exchanges": 0,
+            "exact_sec": 2.143, "cuckoo_sec": 1.192,
+            "exact_shuffle_exchanges": 0, "cuckoo_shuffle_exchanges": 0,
         },
         "streaming": {
             "cpus": 32, "n_rows": 40_000, "expected": 40_000, "batches": 8,
@@ -85,7 +84,7 @@ def test_compact_line_fits_budget():
     assert parsed["queries"]["crawl_3rounds"] in (21.93, 21.9)
     assert parsed["scaling"]["efficiency"] == 0.958
     assert parsed["submit_scaling"]["efficiency"] == 0.905
-    assert parsed["seen_bloom"]["cuckoo_sec"] == 1.192
+    assert parsed["seen_probe"]["cuckoo_sec"] == 1.192
     # the streaming headline must SURVIVE the worst case — redundant
     # sections (extract/crawl) and the coarse secondary rate degrade
     # first; round 4's coarse key once silently evicted the section

@@ -62,6 +62,23 @@ def test_every_query_is_oracle_backed():
     assert sorted(set(QUERIES) - set(ORACLES)) == []
 
 
+def test_every_q_function_is_registered():
+    """A module-level ``q_*`` function is a catalog query: it must be a
+    value of QUERIES or PYTEST_ONLY_QUERIES, or nothing ever runs it.
+    Parts that registered queries compose are private (``_q_*``)."""
+    import inspect
+
+    from crawl4ai_spark import catalog
+
+    registered = {id(f) for f in (*QUERIES.values(), *PYTEST_ONLY_QUERIES.values())}
+    unregistered = sorted(
+        name for name, f in vars(catalog).items()
+        if name.startswith("q_") and inspect.isfunction(f)
+        and id(f) not in registered
+    )
+    assert unregistered == []
+
+
 @pytest.mark.parametrize("name", sorted(PYTEST_ONLY_QUERIES))
 def test_pytest_only_queries_run(name, spark):
     """xxhash/stemmer production twins of the oracle-checked portable

@@ -574,7 +574,7 @@ def test_rewind_to_round_replays_identically(spark, sf_dir, tmp_path):
              pages.select("url").orderBy("url").limit(5).collect()]
     wd = str(tmp_path / "c")
     cfg = CrawlConfig(max_depth=3, round_seconds=1e6, snapshot_tables=True,
-                      seen_filter_kind="bloom")
+                      seen_filter_kind="cuckoo")
     run_crawl(spark, pages, seeds, wd, cfg, max_rounds=3)
     run = CrawlRun(spark, pages, wd, cfg)
     last = run.latest_completed_round()
